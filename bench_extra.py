@@ -5,8 +5,8 @@ file carries the noop-sink / per-phase evidence cited in OPTIMIZATION_r*.md).
 Usage:
   python bench_extra.py [phase ...]        # default: all dedup phases
 Env:
-  SPARK_GRAFT_SF_DIR  (default /root/testdata/sf1.0)
-  SPARK_GRAFT_CPUS    (default 32)
+  SPARK_GRAFT_SF_DIR  (default /root/testdata/sf0.1)
+  SPARK_GRAFT_CPUS    (default: the host's core count, os.cpu_count())
   BENCH_EXTRA_REPS    (default 2; reports best)
 
 Prints one line per phase:  <phase>: best=<s> samples=[..]
@@ -23,8 +23,8 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf1.0")
-CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count()))
 REPS = int(os.environ.get("BENCH_EXTRA_REPS", "2"))
 
 

@@ -7,7 +7,7 @@ golden-by-construction idea the reference's generator embodies
 (ref: generate.py:103-224): the oracle doesn't re-implement extraction, it
 knows what the answer must be because we built the payload.
 
-This is how the driver's CORRECTNESS gate exercises the actual mapInPandas
+This is how the driver's CORRECTNESS gate exercises the actual Python
 extraction stage against an independent expectation.
 """
 
@@ -15,7 +15,6 @@ from __future__ import annotations
 
 import re
 from random import Random
-from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
@@ -60,7 +59,7 @@ _MARKUP_SAFE_SQL = f"""NOT ({_FLAT_SQL} LIKE '```%'
 
 
 def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # single small file = one partition; the downstream mapInPandas work is
+    # single small file = one partition; the downstream Python extraction is
     # CPU-bound, so spread it (tiny shuffle, irrelevant at real scale)
     return spark.read.parquet(f"{sf_dir}/documents.parquet").repartition(
         spark.sparkContext.defaultParallelism
@@ -72,6 +71,42 @@ def _sanitize(col):
         F.replace(F.replace(col, F.lit("&"), F.lit("+")), F.lit("<"), F.lit("(")),
         F.lit(">"),
         F.lit(")"),
+    )
+
+
+def _flat_units(out: DataFrame) -> DataFrame:
+    """Extraction output as (doc_id, newline-flattened text, unit count)."""
+    return out.select(
+        "doc_id",
+        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
+            "extracted_flat"
+        ),
+        F.col("n_units").cast("long").alias("n_units"),
+    ).orderBy("doc_id")
+
+
+def _per_doc(layout):
+    """``extract_stage`` payload_fn: lay each (doc_id, text) row out as a
+    page with ``layout``; a NULL text lays out like ''."""
+    return lambda pdf: [layout(int(i), t or "")
+                        for i, t in zip(pdf["doc_id"], pdf["text"])]
+
+
+def _capped_docs(spark: SparkSession, sf_dir: str, max_words: int,
+                 max_word_len: int) -> DataFrame:
+    """Non-blank docs of at most ``max_words`` words, none longer than
+    ``max_word_len`` chars, so a fixed page geometry holds every doc."""
+    d = _docs(spark, sf_dir).select("doc_id", "text")
+    # count NONEMPTY tokens (leading non-space whitespace would otherwise
+    # produce a phantom '' token and shift the expected unit count)
+    toks = F.filter(
+        F.split(F.trim(F.lower("text")), WS_CLASS + "+"),
+        lambda x: x != "",
+    )
+    return d.filter(
+        (F.length(F.trim("text")) > 0)
+        & (F.size(toks) <= max_words)
+        & (F.size(F.filter(toks, lambda x: F.length(x) > max_word_len)) == 0)
     )
 
 
@@ -218,14 +253,7 @@ def extract_html_br_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     wrapped = d.filter(F.length(F.trim("text")) > 0).select(
         "doc_id", payload.alias("text")
     )
-    out = extract_stage(wrapped)
-    return out.select(
-        "doc_id",
-        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
-            "extracted_flat"
-        ),
-        F.col("n_units").cast("long").alias("n_units"),
-    ).orderBy("doc_id")
+    return _flat_units(extract_stage(wrapped))
 
 
 EXTRACT_HTML_BR_SQL = f"""
@@ -294,29 +322,15 @@ def _pdfish_payload(doc_id: int, text: str) -> str:
 def extract_pdfish_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Encode each doc as a shuffled glyph stream, run the real extraction
     stage (y-cluster → x-sort → word-gap spacing). Expected = whitespace-
-    normalized text."""
-    import pandas as pd
-
+    normalized text; a NULL text gives a NULL, like the oracle."""
     d = _docs(spark, sf_dir).select("doc_id", "text")
-
-    def wrap(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [
-                        _pdfish_payload(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    wrapped = d.mapInPandas(wrap, schema="doc_id long, text string")
-    return (
-        extract_stage(wrapped)
-        .select("doc_id", "extracted_text")
-        .orderBy("doc_id")
-    )
+    out = extract_stage(d, payload_fn=_per_doc(_pdfish_payload))
+    return out.select(
+        "doc_id",
+        F.when(F.col("text").isNotNull(), F.col("extracted_text")).alias(
+            "extracted_text"
+        ),
+    ).orderBy("doc_id")
 
 
 EXTRACT_PDFISH_DOCS_SQL = f"""
@@ -363,36 +377,15 @@ def extract_pdfish_columns_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     expected flat text = whitespace-normalized doc text (column-major order
     restores the original word order by construction, for any number of
     columns); n_units = line count."""
-    import pandas as pd
-
     # empty/whitespace-only docs produce a glyph-less page (0 units) while
     # the word-count oracle would state 1 — exclude identically on both
     # sides, like the html twins
     d = _docs(spark, sf_dir).filter(F.length(F.trim("text")) > 0).select(
         "doc_id", "text"
     )
-
-    def wrap(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [
-                        _pdfish_columns_payload(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    wrapped = d.mapInPandas(wrap, schema="doc_id long, text string")
-    out = extract_stage(wrapped)
-    return out.select(
-        "doc_id",
-        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
-            "extracted_flat"
-        ),
-        F.col("n_units").cast("long").alias("n_units"),
-    ).orderBy("doc_id")
+    return _flat_units(
+        extract_stage(d, payload_fn=_per_doc(_pdfish_columns_payload))
+    )
 
 
 EXTRACT_PDFISH_COLUMNS_SQL = f"""
@@ -446,43 +439,12 @@ def extract_pdfish_title_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     <= TITLE_MAX_WORDS words on both engines so the page geometry is fixed
     (two columns, page width 612 — the spanning threshold must not move
     with content)."""
-    import pandas as pd
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    # count NONEMPTY tokens (leading non-space whitespace would otherwise
-    # produce a phantom '' token and shift the expected unit count) and cap
-    # word length at 32 chars (a longer word would bridge the fixed gutter)
-    toks = F.filter(
-        F.split(F.trim(F.lower("text")), WS_CLASS + "+"),
-        lambda x: x != "",
+    # word length capped at 32 chars (a longer word would bridge the fixed
+    # gutter)
+    d = _capped_docs(spark, sf_dir, TITLE_MAX_WORDS, 32)
+    return _flat_units(
+        extract_stage(d, payload_fn=_per_doc(_pdfish_title_payload))
     )
-    d = d.filter(
-        (F.length(F.trim("text")) > 0)
-        & (F.size(toks) <= TITLE_MAX_WORDS)
-        & (F.size(F.filter(toks, lambda x: F.length(x) > 32)) == 0)
-    )
-
-    def wrap(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [
-                        _pdfish_title_payload(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    wrapped = d.mapInPandas(wrap, schema="doc_id long, text string")
-    out = extract_stage(wrapped)
-    return out.select(
-        "doc_id",
-        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
-            "extracted_flat"
-        ),
-        F.col("n_units").cast("long").alias("n_units"),
-    ).orderBy("doc_id")
 
 
 EXTRACT_PDFISH_TITLE_SQL = f"""
@@ -547,40 +509,10 @@ def extract_pdfish_overlap_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     region below; n_units = 1 + word count. Docs filtered to
     <= OVERLAP_MAX_WORDS words of <= OVERLAP_MAX_WORD_LEN chars on both
     engines so the geometry is fixed."""
-    import pandas as pd
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    toks = F.filter(
-        F.split(F.trim(F.lower("text")), WS_CLASS + "+"),
-        lambda x: x != "",
+    d = _capped_docs(spark, sf_dir, OVERLAP_MAX_WORDS, OVERLAP_MAX_WORD_LEN)
+    return _flat_units(
+        extract_stage(d, payload_fn=_per_doc(_pdfish_overlap_payload))
     )
-    d = d.filter(
-        (F.length(F.trim("text")) > 0)
-        & (F.size(toks) <= OVERLAP_MAX_WORDS)
-        & (F.size(F.filter(toks, lambda x: F.length(x) > OVERLAP_MAX_WORD_LEN)) == 0)
-    )
-
-    def wrap(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [
-                        _pdfish_overlap_payload(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    wrapped = d.mapInPandas(wrap, schema="doc_id long, text string")
-    out = extract_stage(wrapped)
-    return out.select(
-        "doc_id",
-        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
-            "extracted_flat"
-        ),
-        F.col("n_units").cast("long").alias("n_units"),
-    ).orderBy("doc_id")
 
 
 EXTRACT_PDFISH_OVERLAP_SQL = f"""
@@ -649,40 +581,10 @@ def extract_pdfish_heights_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     HEIGHTS_MAX_WORD_LEN chars on both engines so the geometry is fixed.
     Reference analog: per-component crop separation of overlapping
     components (ref: interpreter.py:133-171, :303-308)."""
-    import pandas as pd
-
-    d = _docs(spark, sf_dir).select("doc_id", "text")
-    toks = F.filter(
-        F.split(F.trim(F.lower("text")), WS_CLASS + "+"),
-        lambda x: x != "",
+    d = _capped_docs(spark, sf_dir, HEIGHTS_MAX_WORDS, HEIGHTS_MAX_WORD_LEN)
+    return _flat_units(
+        extract_stage(d, payload_fn=_per_doc(_pdfish_heights_payload))
     )
-    d = d.filter(
-        (F.length(F.trim("text")) > 0)
-        & (F.size(toks) <= HEIGHTS_MAX_WORDS)
-        & (F.size(F.filter(toks, lambda x: F.length(x) > HEIGHTS_MAX_WORD_LEN)) == 0)
-    )
-
-    def wrap(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "text": [
-                        _pdfish_heights_payload(int(i), t)
-                        for i, t in zip(pdf["doc_id"], pdf["text"])
-                    ],
-                }
-            )
-
-    wrapped = d.mapInPandas(wrap, schema="doc_id long, text string")
-    out = extract_stage(wrapped)
-    return out.select(
-        "doc_id",
-        F.replace(F.col("extracted_text"), F.lit("\n"), F.lit(" ")).alias(
-            "extracted_flat"
-        ),
-        F.col("n_units").cast("long").alias("n_units"),
-    ).orderBy("doc_id")
 
 
 EXTRACT_PDFISH_HEIGHTS_SQL = f"""

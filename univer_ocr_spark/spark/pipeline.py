@@ -18,7 +18,7 @@ Scale design (SURVEY.md X14 — the one thing the reference lacks):
 
 from __future__ import annotations
 
-from typing import Iterator, List
+from typing import Callable, Iterator, List
 
 from pyspark.sql import DataFrame, functions as F, types as T
 
@@ -46,7 +46,9 @@ EXTRA_FIELDS = [
 
 
 def extract_stage(df: DataFrame, payload_col: str = "text",
-                  drop_payload: bool = False) -> DataFrame:
+                  drop_payload: bool = False,
+                  payload_fn: Callable[["pd.DataFrame"], List[str]] | None = None,
+                  ) -> DataFrame:
     """Append extraction columns via one Arrow-batched ``mapInPandas`` stage.
 
     One stage, no shuffle: Catalyst keeps upstream filters/pruning below it,
@@ -56,6 +58,11 @@ def extract_stage(df: DataFrame, payload_col: str = "text",
     the extracted table should not duplicate input payloads, and at KB-scale
     payloads this halves the Python→JVM Arrow traffic (mapInPandas cannot be
     column-pruned from above).
+
+    ``payload_fn`` maps one pandas batch to that batch's payload strings,
+    in place of reading ``payload_col``: a payload synthesized from other
+    columns is built inside this same stage, so it never crosses Arrow and
+    the query keeps a single Python boundary.
     """
     import pandas as pd
 
@@ -65,7 +72,8 @@ def extract_stage(df: DataFrame, payload_col: str = "text",
 
     def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
         for pdf in batches:
-            texts: List[str] = pdf[payload_col].tolist()
+            texts: List[str] = (pdf[payload_col].tolist() if payload_fn is None
+                                else payload_fn(pdf))
             ext, spans_col, kinds, n_units, n_spans, n_chars = [], [], [], [], [], []
             for text, spans, kind in extract_payloads_batch(texts):
                 ext.append(text)

@@ -38,15 +38,9 @@ def register_sql_udfs(spark: SparkSession) -> None:
     def extract_spans(p: pd.Series) -> pd.Series:
         from univer_ocr_spark.extract import extract_payloads_batch
 
-        return pd.Series(
-            [
-                [
-                    {"unit": u, "start": s, "end": e}
-                    for (u, s, e) in r[1]
-                ]
-                for r in extract_payloads_batch(p.tolist())
-            ]
-        )
+        # raw (unit, start, end) tuples: Arrow maps them onto the struct
+        # fields positionally, as in the pipeline's extract_stage
+        return pd.Series([r[1] for r in extract_payloads_batch(p.tolist())])
 
     @pandas_udf("string")
     def extract_kind(p: pd.Series) -> pd.Series:
